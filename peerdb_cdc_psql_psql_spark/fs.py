@@ -43,19 +43,6 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     return bool(fs.rename(jsrc, jvm.org.apache.hadoop.fs.Path(dst)))
 
 
-def list_dirs(spark: SparkSession, path: str) -> list[str]:
-    """Immediate subdirectory NAMES under ``path`` (empty if the dir
-    doesn't exist) — used by cache-eviction sweeps over the warehouse."""
-    fs, _, jpath = _fs(spark, path)
-    if not fs.exists(jpath):
-        return []
-    return [
-        st.getPath().getName()
-        for st in fs.listStatus(jpath)
-        if st.isDirectory()
-    ]
-
-
 def list_files(spark: SparkSession, path: str, suffix: str = "") -> list[str]:
     """Data files directly under ``path`` (commit markers like _SUCCESS
     and hidden files excluded). Empty list if the dir doesn't exist."""
@@ -94,7 +81,8 @@ def total_size(spark: SparkSession, paths: list[str]) -> int:
 
 
 def list_dirs(spark: SparkSession, path: str, prefix: str = "") -> list[str]:
-    """Subdirectory names (not full paths) under ``path``."""
+    """Names (not full paths) of the subdirectories of ``path`` that
+    start with ``prefix``, sorted; empty if ``path`` does not exist."""
     fs, _, jpath = _fs(spark, path)
     if not fs.exists(jpath):
         return []

@@ -381,38 +381,38 @@ def _parse_returning(s: str, schema) -> tuple[str, list[str] | None]:
     return s[: m.start()], cols
 
 
-def _read_wal(
-    spark: SparkSession, event_dir: str, staging_dir: str | None
-) -> DataFrame:
-    """The WAL plus (inside an open wire transaction, r10) the
-    connection's dot-prefixed staged events — so a transaction's own
-    uncommitted writes are visible to its later statements, exactly
-    Postgres's read-your-own-writes, while the streaming tail (which
-    lists only the WAL dir, where dot-prefixes are hidden) never sees
-    them until COMMIT renames them in."""
-    from .. import fs
+def _read_wal(spark: SparkSession, event_dir: str, txn=None) -> DataFrame:
+    """The WAL plus the events staged in ``txn`` (a ``WalTxn``) — so a
+    transaction's own uncommitted writes are visible to its later
+    statements, exactly Postgres's read-your-own-writes, while the
+    streaming tail (which lists only the WAL dir, where dot-prefixes
+    are hidden) never sees them until COMMIT renames them in."""
     from ..streaming.cdc import CDC_EVENT_SCHEMA
 
     paths = [event_dir]
-    if staging_dir and fs.exists(spark, staging_dir):
-        paths.append(staging_dir)
+    if txn is not None and txn.staged:
+        paths.append(txn.dir)
     return spark.read.schema(CDC_EVENT_SCHEMA).parquet(*paths)
 
 
 def _current_rows_for_keys(
     spark: SparkSession, event_dir: str, table: str, keys: list[int],
-    staging_dir: str | None = None,
+    txn=None,
 ) -> dict[int, dict]:
     """Current full rows for a bounded key set, folded from the WAL in
-    LSN order (the batch form of ``_current_source_row`` — one scan
-    for the whole statement instead of one per key)."""
+    LSN order (I replaces, U merges, D clears) — one scan for the
+    whole statement. Builds the FULL after-images wire UPDATEs need:
+    the engine's U-event contract carries the whole row
+    (``generate_order_events``), and ``_merged_state`` takes the
+    max-LSN row's columns verbatim, so a partial U image would NULL
+    every column not in the SET list (ADVICE r5, high)."""
     import json as _json
 
     if not keys:
         return {}
     try:
         rows = (
-            _read_wal(spark, event_dir, staging_dir)
+            _read_wal(spark, event_dir, txn)
             .where(
                 (F.col("table") == table)
                 & (F.col("key").isin([int(k) for k in keys]))
@@ -535,43 +535,8 @@ def _parse_sql_values(raw: str) -> list:
     return [_sql_literal(t) for t in _split_top_level(raw)]
 
 
-def _current_source_row(
-    spark: SparkSession, event_dir: str, table: str, key: int,
-    staging_dir: str | None = None,
-) -> dict | None:
-    """Reconstruct the current full row of a mirrored source table
-    from the WAL by folding its events in LSN order (I replaces,
-    U merges, D clears). Used to build FULL after-images for wire
-    UPDATEs — the engine's U-event contract carries the whole row
-    (``generate_order_events``), and ``_merged_state`` takes the
-    max-LSN row's columns verbatim, so a partial U image would NULL
-    every column not in the SET list (ADVICE r5, high)."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    try:
-        events = (
-            _read_wal(spark, event_dir, staging_dir)
-            .where((F.col("table") == table) & (F.col("key") == int(key)))
-            .orderBy("lsn")
-            .collect()  # bounded: one key's history on the interactive path
-        )
-    except Exception:  # noqa: BLE001 — empty/missing WAL → no row
-        return None
-    cur: dict | None = None
-    for row in events:
-        if row["op"] == "D":
-            cur = None
-        else:
-            payload = _json.loads(row["after_json"]) if row["after_json"] else {}
-            cur = payload if (row["op"] == "I" or cur is None) else {**cur, **payload}
-    return cur
-
-
 def _merged_source_view(
-    spark: SparkSession, event_dir: str, table: str, schema,
-    staging_dir: str | None = None,
+    spark: SparkSession, event_dir: str, table: str, schema, txn=None,
 ) -> DataFrame:
     """Current rows of a mirrored source table, reconstructed from the
     WAL: latest event per key (the engine's U-event contract carries
@@ -581,7 +546,7 @@ def _merged_source_view(
     interactive non-key-predicate DML path."""
     from pyspark.sql import Window
 
-    events = _read_wal(spark, event_dir, staging_dir).where(
+    events = _read_wal(spark, event_dir, txn).where(
         F.col("table") == table
     )
     w = Window.partitionBy("key").orderBy(
@@ -604,25 +569,25 @@ def _matched_rows(
     schema,
     predicate: str,
     verb: str,
-    staging_dir: str | None = None,
+    txn=None,
 ) -> list[dict]:
     """Rows of the merged source state matching an arbitrary WHERE
     predicate, as dicts — bounded by ``_DML_PREDICATE_MAX_ROWS`` (the
     interactive path builds per-key events driver-side; an unbounded
     rewrite belongs in a batch job, and the guard makes that a typed
-    error instead of a driver OOM)."""
+    error instead of a driver OOM). The predicate filters this call's
+    DataFrame directly: a session-wide temp view would let concurrent
+    connections evaluate against each other's staged state."""
     try:
-        view = _merged_source_view(
-            spark, event_dir, table, schema, staging_dir
-        )
+        view = _merged_source_view(spark, event_dir, table, schema, txn)
     except Exception:  # noqa: BLE001 — empty/missing WAL → no rows
         return []
-    vname = f"_dml_{table}_state"
-    view.createOrReplaceTempView(vname)
     try:
-        matched = spark.sql(
-            f"SELECT * FROM {vname} WHERE {predicate}"
-        ).limit(_DML_PREDICATE_MAX_ROWS + 1).collect()
+        matched = (
+            view.where(predicate)
+            .limit(_DML_PREDICATE_MAX_ROWS + 1)
+            .collect()
+        )
     except Exception as e:  # noqa: BLE001 — surface as DML syntax error
         raise ValueError(
             f"cannot evaluate {verb} predicate {predicate!r}: "
@@ -665,13 +630,20 @@ def execute_dml_command(
     schemas: dict,
     event_dir: str,
     key_column: str = "id",
-    staging_dir: str | None = None,
+    txn=None,
 ) -> tuple[str, int]:
     """INSERT/UPDATE/DELETE against a mirrored SOURCE table, realized
     as change-event production: each statement appends I/U/D events to
     the WAL-equivalent log (the role the source Postgres plays in the
     reference — insert.ps1 writes rows there and CDC picks them up).
     A running or resumed mirror then applies them downstream.
+
+    Events stage in ``txn`` (a ``workload.WalTxn``) and reach the WAL
+    when it commits; later statements in the same ``txn`` read its
+    staged events. Without one the statement is an implicit
+    transaction (Postgres autocommit): it stages in its own ``WalTxn``,
+    commits before returning and aborts if it raises — so concurrent
+    statements never write into the WAL dir at once.
 
     LSNs come from ``workload.allocate_lsns`` — one process-wide lock
     + per-WAL high-water cache (VERDICT r9 #2), so concurrent wire
@@ -694,10 +666,27 @@ def execute_dml_command(
     SET list into the existing row (EXCLUDED.c takes the incoming
     tuple's value). The conflict target, when given, must be the key
     column (the only uniqueness the engine enforces)."""
+    from ..streaming.workload import WalTxn
+
+    if txn is not None:
+        return _stage_dml(spark, sql, schemas, event_dir, key_column, txn)
+    txn = WalTxn(spark, event_dir)
+    try:
+        out = _stage_dml(spark, sql, schemas, event_dir, key_column, txn)
+        txn.commit()
+    except BaseException:
+        txn.abort()
+        raise
+    return out
+
+
+def _stage_dml(spark, sql, schemas, event_dir, key_column, txn):
+    """Parse one DML statement and stage its change events in
+    ``txn``; returns ``execute_dml_command``'s result."""
     import datetime as _dt
     import json as _json
 
-    from ..streaming.workload import allocate_lsns, append_events
+    from ..streaming.workload import allocate_lsns
 
     s = sql.strip().rstrip(";").strip()
     now = _dt.datetime.now()
@@ -723,6 +712,16 @@ def execute_dml_command(
             [types_by_col[c] for c in ret_cols],
             [tuple(r.get(c) for c in ret_cols) for r in rows_src],
         )
+
+    def _emit(plan: list[tuple[str, dict]]) -> int:
+        # (op, after-image) pairs → consecutive LSNs, staged in txn
+        first = allocate_lsns(spark, event_dir, len(plan))
+        txn.append([
+            (first + i, now, op, table, int(rec[key_column]),
+             None if op == "D" else _json.dumps(rec))
+            for i, (op, rec) in enumerate(plan)
+        ])
+        return len(plan)
 
     m = re.match(
         r"INSERT\s+INTO\s+(\w+)\s*(?:\(([^)]*)\))?\s*VALUES\s*(.+)$",
@@ -779,18 +778,10 @@ def execute_dml_command(
                 raise ValueError(f"INSERT must set the key column {key_column!r}")
             recs.append(rec)
         if conflict is None:
-            first = allocate_lsns(spark, event_dir, len(recs))
-            events = [
-                (first + i, now, "I", table, int(rec[key_column]),
-                 _json.dumps(rec))
-                for i, rec in enumerate(recs)
-            ]
-            append_events(spark, events, staging_dir or event_dir)
-            return f"INSERT 0 {len(events)}", len(events), _ret(recs)
+            n = _emit([("I", rec) for rec in recs])
+            return f"INSERT 0 {n}", n, _ret(recs)
         existing = _current_rows_for_keys(
-            spark, event_dir, table,
-            [int(r[key_column]) for r in recs],
-            staging_dir=staging_dir,
+            spark, event_dir, table, [int(r[key_column]) for r in recs], txn,
         )
         plan: list[tuple[str, dict]] = []  # (op, after-image)
         for rec in recs:
@@ -806,18 +797,9 @@ def execute_dml_command(
                 plan.append(("U", merged))
         if not plan:
             return "INSERT 0 0", 0, _ret([])
-        first = allocate_lsns(spark, event_dir, len(plan))
-        events = [
-            (first + i, now, op, table, int(rec[key_column]),
-             _json.dumps(rec))
-            for i, (op, rec) in enumerate(plan)
-        ]
-        append_events(spark, events, staging_dir or event_dir)
+        n = _emit(plan)
         # Postgres counts inserted + upserted rows in the INSERT tag
-        return (
-            f"INSERT 0 {len(events)}", len(events),
-            _ret([rec for _, rec in plan]),
-        )
+        return f"INSERT 0 {n}", n, _ret([rec for _, rec in plan])
 
     m = re.match(
         r"UPDATE\s+(\w+)\s+SET\s+(.+?)(?:\s+WHERE\s+(.+?))?\s*$",
@@ -838,31 +820,23 @@ def execute_dml_command(
         if km:
             # single-key fast path: one bounded key-history read
             key = int(km.group(1))
-            current = _current_source_row(spark, event_dir, table, key, staging_dir)
+            current = _current_rows_for_keys(
+                spark, event_dir, table, [key], txn
+            ).get(key)
             if current is None:
                 return "UPDATE 0", 0, _ret([])
             currents = [{**current, key_column: key}]
         else:
             currents = _matched_rows(
-                spark, event_dir, table, schema, where_raw, "UPDATE",
-                staging_dir=staging_dir,
+                spark, event_dir, table, schema, where_raw, "UPDATE", txn,
             )
             if not currents:
                 return "UPDATE 0", 0, _ret([])
-        first = allocate_lsns(spark, event_dir, len(currents))
-        events, afters = [], []
-        for i, cur in enumerate(currents):
-            # full after-image: merge SET values into the current row
-            # so non-SET columns survive the apply (Postgres UPDATE
-            # semantics)
-            rec = {**_json_safe(cur), **sets}
-            afters.append(rec)
-            events.append(
-                (first + i, now, "U", table, int(rec[key_column]),
-                 _json.dumps(rec))
-            )
-        append_events(spark, events, staging_dir or event_dir)
-        return f"UPDATE {len(events)}", len(events), _ret(afters)
+        # full after-image: merge SET values into the current row so
+        # non-SET columns survive the apply (Postgres UPDATE semantics)
+        afters = [{**_json_safe(cur), **sets} for cur in currents]
+        n = _emit([("U", rec) for rec in afters])
+        return f"UPDATE {n}", n, _ret(afters)
 
     m = re.match(
         r"DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.+?))?\s*$",
@@ -881,23 +855,19 @@ def execute_dml_command(
             else:
                 # RETURNING needs the row's last-known values — and
                 # gets Postgres-exact existence semantics for free
-                current = _current_source_row(spark, event_dir, table, key, staging_dir)
+                current = _current_rows_for_keys(
+                    spark, event_dir, table, [key], txn
+                ).get(key)
                 if current is None:
                     return "DELETE 0", 0, _ret([])
                 victims = [{**current, key_column: key}]
         else:
             victims = _matched_rows(
-                spark, event_dir, table, schema, where_raw, "DELETE",
-                staging_dir=staging_dir,
+                spark, event_dir, table, schema, where_raw, "DELETE", txn,
             )
             if not victims:
                 return "DELETE 0", 0, _ret([])
-        first = allocate_lsns(spark, event_dir, len(victims))
-        events = [
-            (first + i, now, "D", table, int(v[key_column]), None)
-            for i, v in enumerate(victims)
-        ]
-        append_events(spark, events, staging_dir or event_dir)
-        return f"DELETE {len(events)}", len(events), _ret(victims)
+        n = _emit([("D", v) for v in victims])
+        return f"DELETE {n}", n, _ret(victims)
 
     raise ValueError(f"unrecognized DML: {sql!r}\n{_DML_HELP}")

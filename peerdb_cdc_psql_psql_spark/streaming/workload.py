@@ -15,11 +15,13 @@ import datetime as dt
 import os
 import random
 import statistics
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fs
 from ..catalog import DEMO_SCHEMAS
 from .cdc import CDC_EVENT_SCHEMA, event_row
 
@@ -240,12 +242,17 @@ _LSN_LOCK = _threading.Lock()
 _LSN_NEXT: dict[str, int] = {}
 
 
-def _reserve_from_counter(key: str, n: int, floor: int) -> int:
-    """Atomically reserve ``n`` LSNs from the cross-process counter
-    file under the WAL dir; returns the first. Caller holds
-    ``_LSN_LOCK`` and has already folded disk + cache state into
-    ``floor``. The counter only ever moves forward: a torn/absent
-    counter degrades to ``floor`` (disk MAX + cache), never below."""
+def _bump_counter(key: str, floor: int, n: int = 0) -> int:
+    """Read-modify-write of the cross-process counter file under the
+    WAL dir, under the fcntl flock: returns ``first = max(floor,
+    persisted)`` and persists ``first + n`` (fsync + ``os.replace``)
+    when that moves the counter forward. ``n > 0`` reserves ``n`` LSNs
+    (``allocate_lsns``; caller holds ``_LSN_LOCK`` and has folded disk
+    + cache state into ``floor``); ``n = 0`` only raises the counter to
+    ``floor`` (``append_events``, so cooperating ``spark=None``
+    allocators never mint under LSNs the engine has already written).
+    The counter only ever moves forward: a torn/absent counter
+    degrades to ``floor``, never below."""
     os.makedirs(key, exist_ok=True)
     lock_path = os.path.join(key, ".lsn.lock")
     ctr_path = os.path.join(key, ".lsn.next")
@@ -259,45 +266,14 @@ def _reserve_from_counter(key: str, n: int, floor: int) -> int:
             except (FileNotFoundError, ValueError):
                 persisted = 1
             first = max(floor, persisted)
-            tmp = ctr_path + ".tmp"
-            with open(tmp, "w") as cf:
-                cf.write(str(first + n))
-                cf.flush()
-                os.fsync(cf.fileno())
-            os.replace(tmp, ctr_path)
+            if first + n > persisted:
+                tmp = ctr_path + ".tmp"
+                with open(tmp, "w") as cf:
+                    cf.write(str(first + n))
+                    cf.flush()
+                    os.fsync(cf.fileno())
+                os.replace(tmp, ctr_path)
             return first
-        finally:
-            if _fcntl is not None:
-                _fcntl.flock(lf.fileno(), _fcntl.LOCK_UN)
-
-
-def _advance_counter(key: str, floor: int) -> None:
-    """Monotonically raise the cross-process counter to ``floor``
-    (no reservation). Engine writers call this after landing events so
-    cooperating ``spark=None`` allocators can never mint under LSNs
-    the engine itself has already written — closes the cold-counter
-    race where a fast-path allocator boots before any full allocator
-    has seeded the counter above the on-disk MAX."""
-    os.makedirs(key, exist_ok=True)
-    lock_path = os.path.join(key, ".lsn.lock")
-    ctr_path = os.path.join(key, ".lsn.next")
-    with open(lock_path, "a+") as lf:
-        if _fcntl is not None:
-            _fcntl.flock(lf.fileno(), _fcntl.LOCK_EX)
-        try:
-            try:
-                with open(ctr_path) as cf:
-                    persisted = int(cf.read().strip() or "1")
-            except (FileNotFoundError, ValueError):
-                persisted = 1
-            if floor <= persisted:
-                return
-            tmp = ctr_path + ".tmp"
-            with open(tmp, "w") as cf:
-                cf.write(str(floor))
-                cf.flush()
-                os.fsync(cf.fileno())
-            os.replace(tmp, ctr_path)
         finally:
             if _fcntl is not None:
                 _fcntl.flock(lf.fileno(), _fcntl.LOCK_UN)
@@ -353,7 +329,7 @@ def allocate_lsns(spark: SparkSession, event_dir: str, n: int) -> int:
                 else:
                     raise
         floor = max(disk + 1, _LSN_NEXT.get(key, 1))
-        first = _reserve_from_counter(key, n, floor)
+        first = _bump_counter(key, floor, n)
         _LSN_NEXT[key] = first + n
         return first
 
@@ -363,15 +339,61 @@ def append_events(spark: SparkSession, events: list[tuple], event_dir: str) -> N
     (one multi-row INSERT statement per batch, insert.ps1:280-283).
     Small batches land as one file (a WAL wants few, ordered files);
     a bulk backfill splits at ~500k events/file so the write and the
-    tailing stream's first read both parallelize (VERDICT r3 #6)."""
+    tailing stream's first read both parallelize (VERDICT r3 #6).
+
+    A raw single-writer file writer: two appends into one dir at once
+    share Hadoop's ``_temporary`` dir there and can fail or lose
+    events. Concurrent writers go through ``WalTxn``, which gives
+    each its own dir."""
     n_files = max(1, -(-len(events) // _EVENTS_PER_FILE))
     events_df(spark, events).repartition(n_files).write.mode("append").parquet(
         event_dir
     )
     if events:
         # keep the cross-process counter ahead of everything the
-        # engine has written (see _advance_counter)
-        _advance_counter(event_dir.rstrip("/"), max(e[0] for e in events) + 1)
+        # engine has written (see _bump_counter)
+        _bump_counter(event_dir.rstrip("/"), max(e[0] for e in events) + 1)
+
+
+class WalTxn:
+    """The one way interactive writers (DML statements, wire
+    transactions, COPY) put change events in the WAL: ``append``
+    stages them in a private dot-prefixed dir under the WAL — hidden
+    from the streaming tail and batch readers, and with its own
+    Hadoop ``_temporary``, so concurrent writers never share one —
+    ``commit`` publishes by renaming the staged files into the WAL
+    (each file appears atomically; a crash mid-commit publishes a
+    file subset, which the tail takes as incremental arrival) and
+    ``abort`` deletes the dir. Both are no-ops when nothing was
+    staged. Readers that must see the transaction's own writes read
+    ``dir`` next to the WAL."""
+
+    def __init__(self, spark: SparkSession, event_dir: str) -> None:
+        self.spark = spark
+        self.event_dir = event_dir.rstrip("/")
+        self.dir = f"{self.event_dir}/.txn_{uuid.uuid4().hex[:12]}"
+        self.staged = False
+
+    def append(self, events: list[tuple]) -> None:
+        # marked first: a failed append's partial dir is aborted too
+        self.staged = True
+        append_events(self.spark, events, self.dir)
+
+    def files(self) -> list[str]:
+        """Staged data files (full paths)."""
+        return fs.list_files(self.spark, self.dir) if self.staged else []
+
+    def commit(self) -> None:
+        for f in self.files():
+            name = f.rstrip("/").rsplit("/", 1)[-1]
+            if not fs.rename(self.spark, f, f"{self.event_dir}/{name}"):
+                raise OSError(f"could not publish {f} into {self.event_dir}")
+        self.abort()
+
+    def abort(self) -> None:
+        if self.staged:
+            fs.delete(self.spark, self.dir)
+            self.staged = False
 
 
 def synthesize_orders_distributed(

@@ -1071,27 +1071,24 @@ def _copy_cut_point(buf: bytes | bytearray, co: "_CopyOpts") -> int:
 class _MirrorCopySink:
     """Bounded-memory COPY FROM STDIN sink for a MIRRORED source table
     (VERDICT r8 #1): each ~chunk of parsed rows becomes a batch of 'I'
-    change events written to a dot-prefixed STAGING dir inside the WAL
-    (hidden from Hadoop readers, so the tailing stream never sees
-    uncommitted data), and commit() renames the staged files into the
-    WAL — the frontend never holds more than one chunk of rows, and
-    CopyFail/parse errors abort by deleting the staging dir (nothing
-    was ever visible). LSNs are reserved per chunk through
+    change events staged in the sink's own ``workload.WalTxn`` (hidden
+    from the tailing stream until commit), and commit() publishes
+    them into the WAL at CopyDone — the frontend never holds more than
+    one chunk of rows, and CopyFail/parse errors abort (nothing was
+    ever visible). LSNs are reserved per chunk through
     ``workload.allocate_lsns`` — the process-wide serialized allocator
     (VERDICT r9 #2) — so a DML statement landing mid-COPY gets LSNs
     disjoint from the COPY's (it slots between chunks; the old
     whole-range-up-front scheme collided with any concurrent
-    writer). The crash window (process death
-    mid-rename commits a file subset) is the same torn-multi-file
-    window the existing multi-file append_events has; a WAL tail
-    tolerates incremental file arrival by construction."""
+    writer)."""
 
     def __init__(
         self, spark, table: str, cols: list[str], schemas: dict,
         event_dir: str, key_column: str,
     ) -> None:
         import datetime as _dt
-        import uuid as _uuid
+
+        from .streaming.workload import WalTxn
 
         self.spark = spark
         self.table = table
@@ -1107,17 +1104,14 @@ class _MirrorCopySink:
             for f in schemas[table].fields
         }
         self.col_types = [types.get(c, "string") for c in self.cols]
-        self.event_dir = event_dir.rstrip("/")
-        self.staging = (
-            f"{self.event_dir}/.copy_in_{_uuid.uuid4().hex[:12]}"
-        )
+        self.txn = WalTxn(spark, event_dir)
         self.now = _dt.datetime.now()
         self.total = 0
 
     def apply(self, rows: list[list[str | None]]) -> int:
         import json as _json
 
-        from .streaming.workload import allocate_lsns, append_events
+        from .streaming.workload import allocate_lsns
 
         if not rows:
             return 0
@@ -1134,29 +1128,21 @@ class _MirrorCopySink:
                     f"COPY row has NULL key column {self.key_column!r}"
                 )
             recs.append(rec)
-        first = allocate_lsns(self.spark, self.event_dir, len(recs))
-        events = [
+        first = allocate_lsns(self.spark, self.txn.event_dir, len(recs))
+        self.txn.append([
             (first + i, self.now, "I", self.table,
              int(rec[self.key_column]), _json.dumps(rec))
             for i, rec in enumerate(recs)
-        ]
-        append_events(self.spark, events, self.staging)
-        self.total += len(events)
-        return len(events)
+        ])
+        self.total += len(recs)
+        return len(recs)
 
     def commit(self) -> int:
-        from . import fs as _fs
-
-        for f in _fs.list_files(self.spark, self.staging):
-            name = f.rstrip("/").rsplit("/", 1)[-1]
-            _fs.rename(self.spark, f, f"{self.event_dir}/{name}")
-        _fs.delete(self.spark, self.staging)
+        self.txn.commit()
         return self.total
 
     def abort(self) -> None:
-        from . import fs as _fs
-
-        _fs.delete(self.spark, self.staging)
+        self.txn.abort()
 
 
 class _CatalogCopySink:
@@ -2198,7 +2184,7 @@ class WireServer:
                 rows = self._run_statement(conn, stmt)
             except Exception as e:  # noqa: BLE001 — every engine error
                 # becomes one wire ErrorResponse; the session survives
-                if getattr(self._session_local, "txn_dir", None):
+                if getattr(self._session_local, "txn", None):
                     self._session_local.txn_aborted = True
                 conn.sendall(_error_for(e))
                 return
@@ -2651,9 +2637,7 @@ class WireServer:
                     schemas=self.mirror_env["schemas"],
                     event_dir=self.mirror_env["event_dir"],
                     key_column=self.mirror_env.get("key_column", "id"),
-                    staging_dir=getattr(
-                        self._session_local, "txn_dir", None
-                    ),
+                    txn=getattr(self._session_local, "txn", None),
                 )
             else:
                 self.spark.sql(f"TRUNCATE TABLE {table}").collect()
@@ -2804,7 +2788,7 @@ class WireServer:
         Transaction-queued NOTIFYs issued after the savepoint are
         unqueued too (Postgres rolls notifications back with the
         subtransaction)."""
-        txn = getattr(self._session_local, "txn_dir", None)
+        txn = getattr(self._session_local, "txn", None)
         sps = getattr(self._session_local, "txn_savepoints", {}) or {}
         if txn is None or name not in sps:
             conn.sendall(
@@ -2816,7 +2800,7 @@ class WireServer:
         from . import fs as _fs
 
         keep = sps[name]["files"]
-        for f in _fs.list_files(self.spark, txn):
+        for f in txn.files():
             if f not in keep:
                 _fs.delete(self.spark, f)
         q = getattr(self._session_local, "txn_notifies", None)
@@ -2829,32 +2813,23 @@ class WireServer:
 
     def _txn_finish(self, commit: bool) -> None:
         """Close the connection's open transaction, if any: COMMIT
-        renames the staged event files into the WAL (per-file atomic;
-        the same torn-multi-file crash window append_events has —
-        the tail tolerates incremental arrival by construction);
-        ROLLBACK deletes the staging dir. Transaction-queued NOTIFYs
-        deliver after a COMMIT (Postgres semantics) and are dropped
-        on ROLLBACK/disconnect."""
+        publishes its ``WalTxn`` into the WAL, ROLLBACK aborts it.
+        Transaction-queued NOTIFYs deliver after a COMMIT (Postgres
+        semantics) and are dropped on ROLLBACK/disconnect."""
         queued = getattr(self._session_local, "txn_notifies", None) or []
         self._session_local.txn_notifies = []
         self._session_local.txn_open = False
         try:
-            txn = getattr(self._session_local, "txn_dir", None)
+            txn = getattr(self._session_local, "txn", None)
             self._session_local.txn_savepoints = {}
             self._session_local.txn_aborted = False
             if txn is None:
                 return
-            self._session_local.txn_dir = None
-            from . import fs as _fs
-
-            if not _fs.exists(self.spark, txn):
-                return  # BEGIN with no DML — nothing staged
+            self._session_local.txn = None
             if commit:
-                event_dir = self.mirror_env["event_dir"].rstrip("/")
-                for f in _fs.list_files(self.spark, txn):
-                    name = f.rstrip("/").rsplit("/", 1)[-1]
-                    _fs.rename(self.spark, f, f"{event_dir}/{name}")
-            _fs.delete(self.spark, txn)
+                txn.commit()
+            else:
+                txn.abort()
         finally:
             if commit:
                 for chan, pay in queued:
@@ -3018,26 +2993,23 @@ class WireServer:
                 return True
         if word in ("begin", "start"):
             # Real DML transactions (r10): statements between BEGIN
-            # and COMMIT stage their change events in a dot-prefixed
-            # dir inside the WAL (hidden from the streaming tail —
-            # the COPY staging pattern); the DML readers include the
-            # staging dir, so the transaction reads its own writes.
-            # COMMIT renames the staged files in atomically-per-file;
-            # ROLLBACK (or disconnect) deletes them — nothing was
-            # ever visible. SELECTs over mirror TARGETS still see
-            # committed state only (the tail reads the WAL dir).
+            # and COMMIT stage their change events in the connection's
+            # WalTxn (hidden from the streaming tail); the DML readers
+            # include its staged events, so the transaction reads its
+            # own writes. COMMIT publishes them; ROLLBACK (or
+            # disconnect) aborts — nothing was ever visible. SELECTs
+            # over mirror TARGETS still see committed state only.
             if (
                 self.mirror_env.get("event_dir")
-                and getattr(self._session_local, "txn_dir", None) is None
+                and getattr(self._session_local, "txn", None) is None
             ):
-                import uuid as _uuid
+                from .streaming.workload import WalTxn
 
-                ed = self.mirror_env["event_dir"].rstrip("/")
-                self._session_local.txn_dir = (
-                    f"{ed}/.txn_{_uuid.uuid4().hex[:12]}"
+                self._session_local.txn = WalTxn(
+                    self.spark, self.mirror_env["event_dir"]
                 )
             # NOTIFY queues on the open transaction even when no
-            # mirror WAL is configured (txn_dir stays None then)
+            # mirror WAL is configured (txn stays None then)
             self._session_local.txn_open = True
             conn.sendall(_msg(b"C", _cstr("BEGIN")))
             return True
@@ -3091,7 +3063,7 @@ class WireServer:
             # SAVEPOINT <name> (r10): marker = the staged file set at
             # this point; ROLLBACK TO deletes files staged after it.
             parts = low.split()
-            txn = getattr(self._session_local, "txn_dir", None)
+            txn = getattr(self._session_local, "txn", None)
             if txn is None or len(parts) < 2:
                 conn.sendall(
                     _error(
@@ -3101,15 +3073,13 @@ class WireServer:
                     )
                 )
                 return True
-            from . import fs as _fs
-
             sps = getattr(self._session_local, "txn_savepoints", None)
             if sps is None:
                 sps = self._session_local.txn_savepoints = {}
             name = parts[1]
             sps.pop(name, None)  # re-declare shadows (newest wins)
             sps[name] = {
-                "files": set(_fs.list_files(self.spark, txn)),
+                "files": set(txn.files()),
                 "notifies": len(
                     getattr(self._session_local, "txn_notifies", None)
                     or []
@@ -3235,9 +3205,10 @@ class WireServer:
                 schemas=self.mirror_env["schemas"],
                 event_dir=self.mirror_env["event_dir"],
                 key_column=self.mirror_env.get("key_column", "id"),
-                # inside BEGIN…COMMIT events stage per-connection and
-                # the readers see the transaction's own writes (r10)
-                staging_dir=getattr(self._session_local, "txn_dir", None),
+                # inside BEGIN…COMMIT events stage in the connection's
+                # WalTxn and the readers see its own writes (r10);
+                # outside, the statement is its own implicit txn
+                txn=getattr(self._session_local, "txn", None),
             )
             if returning is not None:
                 # RETURNING (r10): RowDescription + one DataRow per
@@ -3538,16 +3509,16 @@ class WireServer:
         """spark.sql with mirror-target resolution: a reference user's
         main wire workflow is CREATE MIRROR then SELECT against the
         replicated TARGET table. Target state lives as keyed parquet
-        under mirror_env['target_root'], not in the SQL catalog, so an
-        unresolved-table error retries once after registering temp
-        views for any DDL-defined mirror targets that now have data.
+        under mirror_env['target_root'], not in the SQL catalog, so
+        before each statement every DDL-mirror target it names is
+        (re-)registered as a temp view over the target's CURRENT files
+        — a view fixes its file list when built, so one registered
+        once would miss every later micro-batch and compaction.
 
         pg_catalog references take the compatibility path first: psql
         meta-commands (``\\dt``, ``\\d t``, ``\\l``, …) expand into
         Postgres-dialect catalog SQL, answered from Spark-built pg_*
         views after dialect rewriting (operators/pg_compat.py)."""
-        from pyspark.errors import AnalysisException
-
         from .operators.pg_compat import apply_pg_compat
 
         compat = apply_pg_compat(self.spark, stmt)
@@ -3555,29 +3526,25 @@ class WireServer:
             return compat
         if compat is not None:
             stmt = compat
-        try:
-            return self.spark.sql(stmt)
-        except AnalysisException:
-            target_root = self.mirror_env.get("target_root")
-            if not target_root:
-                raise
+        target_root = self.mirror_env.get("target_root")
+        if target_root:
             from .operators.sql_frontend import _DDL_MIRRORS
             from .streaming.cdc import read_target
 
-            registered = False
-            for mirror in _DDL_MIRRORS.values():
+            for mirror in list(_DDL_MIRRORS.values()):
                 for mapping in mirror.tables.values():
+                    if not re.search(
+                        rf"(?i)\b{re.escape(mapping.target_table)}\b", stmt
+                    ):
+                        continue
                     try:
                         read_target(
                             self.spark, mirror, mapping.source_table,
                             target_root,
                         ).createOrReplaceTempView(mapping.target_table)
-                        registered = True
-                    except Exception:  # noqa: BLE001 — target not
-                        continue  # materialized yet; leave unregistered
-            if not registered:
-                raise
-            return self.spark.sql(stmt)
+                    except FileNotFoundError:
+                        continue  # not materialized yet; leave unregistered
+        return self.spark.sql(stmt)
 
     # -- extended protocol (zero-parameter minimum) ---------------------
     def _extended(

@@ -1041,7 +1041,7 @@ def test_copy_fail_mid_stream_rolls_back_mirror(server, spark):
     )
     from peerdb_cdc_psql_psql_spark import fs as _fs
 
-    leftovers = _fs.list_dirs(spark, event_dir, prefix=".copy_in_")
+    leftovers = _fs.list_dirs(spark, event_dir, prefix=".")
     assert not leftovers, f"staging not cleaned up: {leftovers}"
 
 
@@ -2171,6 +2171,177 @@ def test_concurrent_dml_and_copy_mint_distinct_lsns(spark, tmp_path):
     assert len(rows) == 1 + 8 + 12
     lsns = [r["lsn"] for r in rows]
     assert len(set(lsns)) == len(lsns), "colliding LSNs minted"
+
+
+def test_concurrent_autocommit_inserts_publish_exactly_once(spark, tmp_path):
+    """Autocommit DML is an implicit transaction: each statement
+    stages in its own dir under the WAL and publishes by rename, so
+    concurrent single-row INSERTs never share Hadoop's ``_temporary``
+    dir in the WAL — every call succeeds, every event lands exactly
+    once with a distinct LSN, and no staging dir is left behind."""
+    import os
+    import threading
+
+    from peerdb_cdc_psql_psql_spark.catalog import DEMO_SCHEMAS
+    from peerdb_cdc_psql_psql_spark.operators.sql_frontend import (
+        execute_dml_command,
+    )
+    from peerdb_cdc_psql_psql_spark.streaming.cdc import CDC_EVENT_SCHEMA
+
+    event_dir = str(tmp_path / "wal")
+    n_threads, per_thread = 3, 10
+    errors: list = []
+    start = threading.Barrier(n_threads)
+
+    def writer(base: int) -> None:
+        start.wait()
+        for i in range(per_thread):
+            try:
+                execute_dml_command(
+                    spark,
+                    f"INSERT INTO orders (id, quantity) VALUES ({base + i}, 1)",
+                    schemas=DEMO_SCHEMAS, event_dir=event_dir,
+                )
+            except Exception as e:  # noqa: BLE001
+                errors.append(e)
+
+    threads = [
+        threading.Thread(target=writer, args=(100 * (t + 1),))
+        for t in range(n_threads)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not errors, errors
+    rows = spark.read.schema(CDC_EVENT_SCHEMA).parquet(event_dir).collect()
+    want = sorted(
+        100 * (t + 1) + i for t in range(n_threads) for i in range(per_thread)
+    )
+    assert sorted(r["key"] for r in rows) == want
+    assert len({r["lsn"] for r in rows}) == len(rows)
+    staged = [
+        d for d in os.listdir(event_dir)
+        if d.startswith(".") and os.path.isdir(os.path.join(event_dir, d))
+    ]
+    assert not staged, staged
+
+
+def test_concurrent_predicate_updates_see_only_own_staged_rows(
+    spark, tmp_path
+):
+    """Two open transactions on one table run non-key-predicate
+    UPDATEs at once: each evaluates its predicate against the WAL plus
+    its OWN staged rows only — never the other's — so each touches
+    exactly the rows it inserted."""
+    import threading
+
+    from peerdb_cdc_psql_psql_spark.catalog import DEMO_SCHEMAS
+    from peerdb_cdc_psql_psql_spark.operators.sql_frontend import (
+        execute_dml_command,
+    )
+    from peerdb_cdc_psql_psql_spark.streaming.workload import WalTxn
+
+    event_dir = str(tmp_path / "wal")
+    t0 = dt.datetime(2024, 1, 1)
+    # a committed event on another table: the orders state each
+    # transaction sees is exactly its own staged rows
+    workload.append_events(
+        spark, [(1, t0, "I", "customers", 1, '{"id": 1}')], event_dir
+    )
+    ctx = {"schemas": DEMO_SCHEMAS, "event_dir": event_dir}
+    start = threading.Barrier(2)
+    touched: dict[int, list] = {100: [], 200: []}
+    errors: list = []
+
+    def txn_body(base: int) -> None:
+        txn = WalTxn(spark, event_dir)
+        try:
+            execute_dml_command(
+                spark,
+                f"INSERT INTO orders (id, quantity) VALUES "
+                f"({base}, 1), ({base + 1}, 1)",
+                txn=txn, **ctx,
+            )
+            start.wait()
+            for _ in range(4):
+                tag, _, ret = execute_dml_command(
+                    spark,
+                    f"UPDATE orders SET purchaser = {base} "
+                    "WHERE quantity >= 0 RETURNING id",
+                    txn=txn, **ctx,
+                )
+                touched[base].append((tag, sorted(r[0] for r in ret[2])))
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+        finally:
+            txn.abort()
+
+    threads = [
+        threading.Thread(target=txn_body, args=(b,)) for b in (100, 200)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not errors, errors
+    for base, got in touched.items():
+        assert got == [("UPDATE 2", [base, base + 1])] * 4, (base, got)
+
+
+@pytest.mark.skipif(psql_missing, reason="psql client not installed")
+def test_psql_mirror_target_reads_follow_new_batches(server, spark, tmp_path):
+    """SELECTs over a mirror target re-resolve its files per
+    statement: a later SELECT sees rows the mirror applied after an
+    earlier SELECT of the same target, and still reads the right rows
+    after a compaction swaps the base version."""
+    from peerdb_cdc_psql_psql_spark.operators.sql_frontend import _DDL_MIRRORS
+    from peerdb_cdc_psql_psql_spark.streaming.cdc import (
+        compact_target,
+        read_target,
+    )
+
+    tgt = str(tmp_path / "tgt")
+
+    def applied(n: int) -> None:
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            try:
+                if read_target(
+                    spark, _DDL_MIRRORS["freshmirror"], "orders", tgt
+                ).count() == n:
+                    return
+            except FileNotFoundError:
+                pass
+            time.sleep(0.5)
+        raise AssertionError(f"mirror never applied {n} rows")
+
+    r = _psql(
+        server.port,
+        "CREATE MIRROR freshmirror WITH TABLE MAPPING (orders:orders_fresh)",
+    )
+    assert r.returncode == 0, r.stderr
+    try:
+        applied(2)
+        r = _psql(server.port, "SELECT count(*) FROM orders_fresh")
+        assert r.returncode == 0 and r.stdout.strip() == "2", r
+        r = _psql(
+            server.port, "INSERT INTO orders (id, quantity) VALUES (7, 3)"
+        )
+        assert r.returncode == 0 and "INSERT 0 1" in r.stdout, r.stderr
+        r = _psql(server.port, "RESUME MIRROR freshmirror")
+        assert r.returncode == 0, r.stderr
+        applied(3)
+        r = _psql(server.port, "SELECT count(*) FROM orders_fresh")
+        assert r.returncode == 0 and r.stdout.strip() == "3", r
+        compact_target(spark, _DDL_MIRRORS["freshmirror"], "orders", tgt)
+        r = _psql(
+            server.port, "SELECT id, quantity FROM orders_fresh ORDER BY id"
+        )
+        assert r.returncode == 0, r.stderr
+        assert r.stdout.splitlines() == ["1|9", "2|7", "7|3"]
+    finally:
+        _psql(server.port, "DROP MIRROR IF EXISTS freshmirror")
 
 
 def test_dml_decimal38_after_images_exact(spark, tmp_path):
